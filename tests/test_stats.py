@@ -34,3 +34,33 @@ def test_runtime_stats_progress(spark):
     assert len(progress) >= 1
     assert stats.partitions_processed() >= 1
     assert all(s.failed_tasks == 0 for s in progress)
+
+
+def test_runtime_stats_sees_every_job_of_a_parallel_wave(spark):
+    """Keyed mutations launch their overlapped jobs from a thread pool;
+    each thread inherits the caller's job group, so a group-scoped
+    RuntimeStats counts them instead of losing them to the null group."""
+    import shutil
+
+    from sif_spark.table import SifTable
+
+    path = "/tmp/sif_stats_upsert_table"
+    shutil.rmtree(path, ignore_errors=True)
+    t = SifTable.create(
+        spark, path, spark.range(0, 100).withColumnRenamed("id", "k"),
+        key_col="k", key_bloom=True,
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    stats = RuntimeStats(spark, job_group="stats-upsert")
+    try:
+        t.upsert(spark.range(50, 150).withColumnRenamed("id", "k"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    leaked = set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert not leaked, f"jobs outside the caller's group: {sorted(leaked)}"
+    # bounds ∥ bloom probes, then survivor ∥ update writes (+ their
+    # bloom read-backs): at least four jobs, all in the group
+    assert len(stats.job_ids()) >= 4
+    shutil.rmtree(path, ignore_errors=True)

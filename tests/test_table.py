@@ -1914,13 +1914,13 @@ def test_concurrent_disjoint_mergers_rebase_without_rerun(spark, tdir):
     def merger(i):
         try:
             t = SifTable(spark, tdir)
-            orig = t._merge_once
+            orig = t._keyed_once
 
             def counted(*a, **kw):
                 runs[i] += 1
                 return orig(*a, **kw)
 
-            t._merge_once = counted
+            t._keyed_once = counted
             src = _df(spark, i * 1000 + 200, i * 1000 + 400, f"M{i}")
             ins = _df(spark, i * 1000 + 600, i * 1000 + 700, f"I{i}")
             barrier.wait()
@@ -1966,7 +1966,7 @@ def test_concurrent_disjoint_mergers_rebase_without_rerun(spark, tdir):
 def test_rebase_commit_deterministic_remints_version_dirs(spark, tdir):
     """Deterministic rebase: merger B plans against a stale snapshot
     (one-shot stale _load), merger A commits in between, and B's
-    commit rebases WITHOUT re-running (its _merge_once runs once).
+    commit rebases WITHOUT re-running (its _keyed_once runs once).
     The freshly written dirs are RE-MINTED to the committed version's
     prefix — the change feed derives _commit_version from file paths,
     so without the rename B's rows would be tagged with the stale
@@ -1995,11 +1995,13 @@ def test_rebase_commit_deterministic_remints_version_dirs(spark, tdir):
         when_not_matched_insert=True,
     )
     # B (planned against v2) commits v4 via rebase — one job run
-    v = tb._merge_once(
+    v = tb._keyed_once(
+        "merge",
         _df(spark, 1200, 1400, "MB").unionByName(
             _df(spark, 1600, 1700, "IB")
         ),
-        {"v": "s.v"}, None, False, True, None, None,
+        upd={"v": "s.v"},
+        ins=True,
     )
     assert v == 4
     m4 = tb._load(4)
@@ -2073,3 +2075,97 @@ def test_materialize_source_targets_wide_plans_only(spark):
 
     ck = spark.range(10).localCheckpoint(eager=True)
     assert _materialize_source(ck) is ck
+
+
+def test_merge_rejects_non_deterministic_clauses_before_any_write(
+    spark, tdir
+):
+    """A rand()/uuid() clause would draw differently in the rewritten-
+    group write and in the change file's own job, so the change file
+    could disagree with the committed rows: merge refuses such a clause
+    by analysis alone — no new version and no new data dir."""
+    import os
+
+    t = SifTable.create(spark, tdir, _df(spark, 0, 20, "a"), key_col="k",
+                        cdf=True)
+    dirs = sorted(os.listdir(f"{tdir}/data"))
+    src = _df(spark, 5, 25, "b")
+    with pytest.raises(ValueError, match="when_matched_update"):
+        t.merge(src, when_matched_update={"v": "cast(rand() as string)"})
+    with pytest.raises(ValueError, match="when_matched_delete"):
+        t.merge(src, when_matched_delete="s.k > rand() * 30")
+    with pytest.raises(ValueError, match="when_not_matched_insert"):
+        t.merge(src, when_not_matched_insert={"k": "s.k", "v": "uuid()"})
+    assert t._versions() == [1]
+    assert sorted(os.listdir(f"{tdir}/data")) == dirs
+    assert not os.path.exists(f"{tdir}/cdc")
+    # deterministic expressions over both sides still merge
+    t.merge(src, when_matched_update={"v": "concat(s.v, t.v)"},
+            when_matched_delete="s.k = 1", when_not_matched_insert=True)
+    assert t._versions() == [1, 2]
+
+
+_INHERITED = ("key_col", "key_cols", "bucket", "key_bloom", "cdf", "dv",
+              "dvs", "txns")
+
+
+def _kvx(spark, lo, hi, val):
+    return _df(spark, lo, hi, val).withColumn("x", F.col("k") * 2)
+
+
+@pytest.mark.parametrize("op", [
+    "append", "upsert", "merge", "merge_delete_dv", "delete_keys",
+    "delete_keys_dv", "delete", "overwrite", "compact", "restore",
+    "rename_column", "drop_column",
+])
+def test_every_manifest_op_carries_the_table_fields(spark, tdir, op):
+    """Every op that publishes a manifest carries the table-level fields
+    of its parent (key spec, bucket, bloom/cdf/dv flags, tombstone list,
+    txn high-waters) and the column-id watermark."""
+    dv = op.endswith("_dv")
+    t = SifTable.create(spark, tdir, _kvx(spark, 0, 40, "a"), key_col="k",
+                        key_bloom=True, cdf=True, dv=dv,
+                        txn=("app", 7))
+    if dv:
+        t.delete_keys(_df(spark, 0, 3, "d"))  # a live tombstone to carry
+    if op == "restore":
+        t.append(_kvx(spark, 40, 50, "b"))
+    before = t._load()
+    run = {
+        "append": lambda: t.append(_kvx(spark, 50, 60, "b")),
+        "upsert": lambda: t.upsert(_kvx(spark, 30, 45, "u")),
+        "merge": lambda: t.merge(
+            _kvx(spark, 30, 45, "m"), when_matched_update={"v": "s.v"},
+            when_matched_delete="s.k = 31", when_not_matched_insert=True,
+        ),
+        "merge_delete_dv": lambda: t.merge(
+            _kvx(spark, 10, 15, "m"), when_matched_delete=True
+        ),
+        "delete_keys": lambda: t.delete_keys(_df(spark, 5, 9, "d")),
+        "delete_keys_dv": lambda: t.delete_keys(_df(spark, 5, 9, "d")),
+        "delete": lambda: t.delete("k < 4"),
+        "overwrite": lambda: t.overwrite(_kvx(spark, 0, 5, "o")),
+        "compact": lambda: t.compact(),
+        "restore": lambda: t.restore(1),
+        "rename_column": lambda: t.rename_column("v", "w"),
+        "drop_column": lambda: t.drop_column("x"),
+    }[op]
+    assert run() == before["version"] + 1
+    after = t._load()
+    assert after["op"] == {
+        "merge_delete_dv": "merge", "delete_keys": "delete",
+        "delete_keys_dv": "delete",
+    }.get(op, op)
+    assert after["parent"] == before["version"]
+    for f in _INHERITED:
+        assert f in after, f
+        if f != "dvs":
+            assert after[f] == before[f], f
+    assert after["txns"] == {"app": 7}
+    # create writes no tombstone list; every later manifest does
+    dvs = before.get("dvs", [])
+    if dv:
+        assert after["dvs"][:-1] == dvs and len(after["dvs"]) == len(dvs) + 1
+    else:
+        assert after["dvs"] == dvs == []
+    assert after["last_column_id"] >= before["last_column_id"] >= 2

@@ -4,9 +4,11 @@ manifest chain is contiguous, (2) every committed snapshot equals the
 deterministic replay of its op prefix — no torn upsert is visible —
 and (3) a fresh writer resumes to a bit-identical final table.
 
-Runs in a subprocess (needs its own JVMs to kill); ~2-4 min. Marked
-`cluster` — part of the full CI run, not the fast loop.
-See tools/table_fault_probe.py for the scenario."""
+Runs in a subprocess (needs its own JVMs to kill); ~2-4 min each. The
+default-store probe stays in the fast lane as the commit path's crash
+sentinel; the other two are marked `cluster` — part of the full CI
+run, not the fast loop. See tools/table_fault_probe.py for the
+scenario."""
 
 from __future__ import annotations
 
@@ -15,8 +17,6 @@ import subprocess
 import sys
 
 import pytest
-
-pytestmark = pytest.mark.cluster
 
 
 def test_table_sigkill_mid_commit_never_tears_a_snapshot():
@@ -35,6 +35,7 @@ def test_table_sigkill_mid_commit_never_tears_a_snapshot():
     )
 
 
+@pytest.mark.cluster
 def test_table_sigkill_under_conditional_put_store():
     """Same three kill windows through PosixExclLogStore (the
     object-store-shaped conditional-put protocol): contiguous chain,
@@ -55,6 +56,7 @@ def test_table_sigkill_under_conditional_put_store():
     assert any(r["killed_mid_run"] for r in res["rounds"]), res
 
 
+@pytest.mark.cluster
 def test_stream_cdc_apply_sigkill_mid_stream_never_double_applies():
     """SIGKILL mid-stream on the CDC-apply loop (merge per
     micro-batch): resume from the checkpoint must land the replayed
